@@ -11,7 +11,7 @@ Data path (nothing ever flows through the driver):
 
 * **Shard files, COW per round.** The bitmap lives as one file per shard
   (``bloom/shard_NNNNN.npz`` inside a snapshot dir); the manifest maps
-  shard id → file, exactly like the frontier's COW buckets. Shards are
+  shard id → file, and untouched shards carry forward by reference. Shards are
   keyed by ``pmod(url_hash, n_shards)`` — the same bucketing as the
   frontier/seen layout, so each executor touches only the shard bitmaps
   co-located with its key range.
@@ -20,9 +20,9 @@ Data path (nothing ever flows through the driver):
   bitmap from shared storage, ORs the new bits in, and writes the new
   shard file into the snapshot dir (atomic tmp+rename). Only (shard id,
   path) rows — ≤ n_shards of them — return to the driver.
-* **Executor-side probe** (``bloom_prefilter``): candidate links are
+* **Executor-side probe** (``bloom_flag``): candidate links are
   repartitioned by shard; each task lazily loads only the shard bitmaps
-  its partition needs and filters in place. No whole-bitmap broadcast —
+  its partition needs and flags each row in place. No whole-bitmap broadcast —
   at the 10^10-key sizing (~12 GB of bitmap) a per-round broadcast would
   be the scale-killer; per-task shard loads are a few MB each.
 
@@ -30,7 +30,8 @@ Sizing for 10^10 keys at 1% FPP is ~12 GB of bitmap total — e.g. 4096
 shards × ~3 MB. Bit positions use Kirsch-Mitzenmacher double hashing
 (g_i = h1 + i·h2 mod m) derived from the 64-bit url_hash, fully
 numpy-vectorized; positions are independent of the shard assignment, so a
-shard file is simply one row of the logical full bitmap.
+shard file is simply one row of the logical full bitmap. Shard files are
+written and probed with the same ``N_HASHES`` hash count.
 """
 
 from __future__ import annotations
@@ -40,7 +41,10 @@ from typing import Iterator
 
 import numpy as np
 
-__all__ = ["ShardedBloom", "update_bloom_shards", "bloom_flag", "bloom_prefilter"]
+__all__ = ["N_HASHES", "ShardedBloom", "update_bloom_shards", "bloom_flag"]
+
+# hash functions per key for ShardedBloom and for every shard file
+N_HASHES = 7
 
 _MIX1 = np.uint64(0xFF51AFD7ED558CCD)
 _MIX2 = np.uint64(0xC4CEB9FE1A85EC53)
@@ -60,7 +64,7 @@ def _h2(h: np.ndarray) -> np.ndarray:
 class ShardedBloom:
     """Bitmaps per shard; add/contains over int64 key arrays."""
 
-    def __init__(self, n_shards: int = 32, bits_per_shard: int = 1 << 20, n_hashes: int = 7):
+    def __init__(self, n_shards: int = 32, bits_per_shard: int = 1 << 20, n_hashes: int = N_HASHES):
         self.n_shards = n_shards
         self.m = np.uint64(bits_per_shard)
         self.k = n_hashes
@@ -120,11 +124,11 @@ def _pmod(h: np.ndarray, n: int) -> np.ndarray:
     return ((h % n) + n) % n
 
 
-def _load_shard(base_path: str, rel: str | None, bits_per_shard: int, n_hashes: int) -> ShardedBloom:
+def _load_shard(base_path: str, rel: str | None, bits_per_shard: int) -> ShardedBloom:
     """One shard as a 1-shard filter: bit positions depend only on the key
     (never on the shard id), so row s of the logical bitmap behaves
     identically inside a ShardedBloom(1, ...)."""
-    b = ShardedBloom(1, bits_per_shard, n_hashes)
+    b = ShardedBloom(1, bits_per_shard)
     if rel:
         z = np.load(os.path.join(base_path, rel))
         b.bits = z["bits"]
@@ -138,7 +142,6 @@ def update_bloom_shards(
     snap: str,
     n_shards: int,
     bits_per_shard: int,
-    n_hashes: int = 7,
 ) -> dict[str, str]:
     """OR a round's newly-seen hashes into the shard bitmaps, executor-side.
 
@@ -159,13 +162,13 @@ def update_bloom_shards(
         import pandas as pd
 
         shard = int(key[0])
-        b = _load_shard(base_path, bmap.get(str(shard)), bits_per_shard, n_hashes)
+        b = _load_shard(base_path, bmap.get(str(shard)), bits_per_shard)
         b.add(pdf["url_hash"].to_numpy(np.int64))
         rel = f"{snap}/bloom/shard_{shard:05d}.npz"
         path = os.path.join(base_path, rel)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = f"{path}.{os.getpid()}.tmp.npz"
-        np.savez_compressed(tmp, bits=b.bits, m=bits_per_shard, k=n_hashes, n_shards=1)
+        np.savez_compressed(tmp, bits=b.bits, m=bits_per_shard, k=N_HASHES, n_shards=1)
         os.replace(tmp, path)
         return pd.DataFrame({"shard": [shard], "path": [rel], "added": [len(pdf)]})
 
@@ -188,7 +191,6 @@ def bloom_flag(
     shard_map: dict[str, str],
     n_shards: int,
     bits_per_shard: int,
-    n_hashes: int = 7,
     flag_col: str = "_maybe_seen",
 ):
     """Single-pass membership probe against the shard files, executor-side.
@@ -213,7 +215,7 @@ def bloom_flag(
 
         def get(s: int) -> ShardedBloom:
             if s not in cache:
-                cache[s] = _load_shard(base_path, bmap.get(str(s)), bits_per_shard, n_hashes)
+                cache[s] = _load_shard(base_path, bmap.get(str(s)), bits_per_shard)
             return cache[s]
 
         for pdf in batches:
@@ -230,23 +232,3 @@ def bloom_flag(
     return links.repartition(
         n_parts, F.pmod(F.col("url_hash"), F.lit(n_shards))
     ).mapInPandas(run, schema=schema)
-
-
-def bloom_prefilter(
-    links,
-    base_path: str,
-    shard_map: dict[str, str],
-    n_shards: int,
-    bits_per_shard: int,
-    n_hashes: int = 7,
-    keep_hits: bool = True,
-):
-    """Filter form of ``bloom_flag``: keep *maybe seen* rows
-    (``keep_hits=True``) or *definitely unseen* rows (``keep_hits=False``).
-    Prefer ``bloom_flag`` when both sides are needed — one probe, not two.
-    """
-    from pyspark.sql import functions as F
-
-    flagged = bloom_flag(links, base_path, shard_map, n_shards, bits_per_shard, n_hashes)
-    cond = F.col("_maybe_seen") if keep_hits else ~F.col("_maybe_seen")
-    return flagged.filter(cond).drop("_maybe_seen")

@@ -181,15 +181,14 @@ def _scalar_priority(phase: str) -> Column:
 
 # ---------------------------------------------------------------- histogram
 #
-# The frontier manifest carries a tiny priority histogram per COW bucket:
-# row counts grouped by (depth, count-bin). It is maintained incrementally at
-# commit time (only rewritten buckets recompute theirs — the same COW pattern
-# as bucket sizes) and lets select_wave derive its prefilter threshold and
-# rank-bucket boundaries **driver-side, with zero frontier scan**. Without it,
-# every round pays one approxQuantile pass over the whole frontier — O(10^9
-# rows) of scan per round at web scale just to find ~32 numbers. This is the
-# Iceberg manifest-statistics idea (per-file column stats steering the scan)
-# applied to the priority key.
+# The frontier manifest carries a tiny priority histogram per bucket: row
+# counts grouped by (depth, count-bin). Each commit recomputes it with one agg
+# over the new frontier, overlapped with the frontier write, and it lets
+# select_wave derive its prefilter threshold and rank-bucket boundaries
+# **driver-side, with zero frontier scan**. Without it, a large wave pays one
+# histogram pass over the whole frontier — O(10^9 rows) of scan per round at
+# web scale just to find ~32 numbers. This is the Iceberg manifest-statistics
+# idea (per-file column stats steering the scan) applied to the priority key.
 #
 # Count bins are exact for c ≤ 31 and log2-spaced above (counts clamp at
 # 2^22-1 like _scalar_priority), so a histogram has ≤ 49 count bins × the few
@@ -289,7 +288,6 @@ def select_wave(
     broadcast_budgets: bool = True,
     default_budget: int = 1,
     salt_factor: int = 8,
-    frontier_size: int | None = None,
     threshold_prefilter_min: int = 10_000,
     priority_hist: dict[tuple[int, int], int] | None = None,
     mega_bucket_min: int = 1 << 18,
@@ -320,13 +318,16 @@ def select_wave(
     # no-ops, so skip the two window shuffles entirely
     budgets_can_bind = host_budgets is not None or default_budget < wave_cap
     want_prefilter = wave_cap >= threshold_prefilter_min
-    if want_prefilter and frontier_size is None:
-        if priority_hist:
-            frontier_size = hist_total(priority_hist)
-        else:
-            # parquet count(*) is footer-metadata-only — cheap even at scale
-            frontier_size = frontier.count()
-    large = bool(want_prefilter and frontier_size and frontier_size > 4 * wave_cap)
+    if want_prefilter and not priority_hist:
+        # no manifest histogram (a caller outside the crawl loop): one agg
+        # over the frontier builds it, and the bounds come from it below
+        priority_hist = {
+            (int(r["_hd"]), int(r["_hc"])): int(r["c"])
+            for r in frontier.groupBy(*hist_cell_cols())
+            .agg(F.count(F.lit(1)).alias("c"))
+            .collect()
+        }
+    large = bool(want_prefilter and hist_total(priority_hist) > 4 * wave_cap)
 
     if wave_cap > 1 and budgets_can_bind:
         # budgets first, prefilter second: a priority-only prefilter ahead
@@ -365,19 +366,13 @@ def select_wave(
         # rounds regardless — scan efficiency only); the boundaries also
         # bucket the survivors for a fully parallel exact rank (no
         # single-task sort/window anywhere). Boundaries come from the
-        # manifest priority histogram when the caller has one (zero frontier
-        # scan), else from one approxQuantile pass. Falls back to the simple
-        # exact path if the estimate under-collects (binding budgets).
+        # priority histogram (zero frontier scan when the manifest carries
+        # it). Falls back to the simple exact path if the estimate
+        # under-collects (binding budgets).
         key = _scalar_priority(phase)
         keyed = cand.withColumn("_pk", key.cast("double"))
         n_buckets = max(2, sess.sparkContext.defaultParallelism)
-        if priority_hist:
-            bounds = hist_bounds(priority_hist, phase, wave_cap, n_buckets)
-        else:
-            frac = min(1.0, 3.0 * wave_cap / frontier_size)
-            bounds = keyed.stat.approxQuantile(
-                "_pk", [frac * (i + 1) / n_buckets for i in range(n_buckets)], 0.01
-            )
+        bounds = hist_bounds(priority_hist, phase, wave_cap, n_buckets)
         filtered = keyed.filter(F.col("_pk") <= bounds[-1])
         ranked, n_candidates = _bucketed_rank(
             filtered, bounds, order, wave_cap, salt_factor=salt_factor,
@@ -593,12 +588,13 @@ def _mega_sub_bounds(
 
 
 def merge_frontier(
-    frontier_changed_old: DataFrame,
+    frontier: DataFrame,
     wave_keys: DataFrame,
     discoveries: DataFrame,
     round_no: int,
 ) -> DataFrame:
-    """Per-round frontier merge over the *changed buckets only* (COW).
+    """Per-round frontier merge: the whole new frontier, which the round's
+    commit rewrites in full.
 
     ``discoveries``: (url_hash, url, host, occ, first_pop_rank,
     first_bib_index, first_depth) — already deduped against ``seen`` and
@@ -610,7 +606,7 @@ def merge_frontier(
     * a new key enters with (occ, first_depth + 1) at queue position
       ``encode_seq(round, first_pop_rank, first_bib_index)``
     """
-    rest = frontier_changed_old.join(wave_keys.select("url_hash"), "url_hash", "left_anti")
+    rest = frontier.join(wave_keys.select("url_hash"), "url_hash", "left_anti")
     merged = rest.alias("f").join(discoveries.alias("d"), "url_hash", "full_outer")
     return merged.select(
         F.col("url_hash"),

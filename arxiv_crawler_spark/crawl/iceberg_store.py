@@ -1,19 +1,18 @@
 """Iceberg-backed SnapshotStore — backend (a) of SURVEY.md §7.0.1.
 
 The parquet+manifest :class:`~arxiv_crawler_spark.crawl.store.SnapshotStore`
-re-creates two Iceberg behaviors by hand (bucket-granular copy-on-write and
-an atomic manifest flip). When real Iceberg jars and a catalog ARE on the
+re-creates two Iceberg behaviors by hand (snapshot commits and an atomic
+manifest flip). When real Iceberg jars and a catalog ARE on the
 classpath, this sibling maps the same store contract onto native Iceberg
 tables instead:
 
 ==================  =====================================================
 store concept        Iceberg realization
 ==================  =====================================================
-frontier COW         ``frontier`` table partitioned by ``bucket``;
-                     per-round ``overwritePartitions()`` (dynamic
-                     partition overwrite — Iceberg rewrites only the
-                     partitions present in the incoming data, the exact
-                     analog of the manifest's bucket swap)
+frontier rewrite     ``frontier`` table partitioned by ``bucket``;
+                     per-round unconditional ``overwrite`` of the whole
+                     table in one atomic snapshot (the analog of the
+                     manifest's per-snapshot frontier dir)
 seen/fetched/edges   append-only tables, ``writeTo(...).append()``
                      (Iceberg appends are atomic snapshot commits)
 manifest flip        a ``rounds`` bookkeeping table written LAST; its
@@ -126,7 +125,6 @@ class IcebergSnapshotStore:
         catalog: str = "iceberg",
         namespace: str = "crawl",
         bloom_bits_per_shard: int = 1 << 20,
-        bloom_hashes: int = 7,
         **_: Any,
     ):
         self.path = path  # bloom sidecar files only; tables live in the catalog
@@ -135,7 +133,6 @@ class IcebergSnapshotStore:
         self.catalog = catalog
         self.namespace = namespace
         self.bloom_bits_per_shard = bloom_bits_per_shard
-        self.bloom_hashes = bloom_hashes
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
         self._ensure_tables()
 
@@ -148,9 +145,9 @@ class IcebergSnapshotStore:
         s.sql(
             f"CREATE TABLE IF NOT EXISTS {self._tbl('frontier')} "
             f"({self._FRONTIER_DDL}) USING iceberg PARTITIONED BY (bucket) "
-            # COW is the right trade for whole-bucket swaps (we always
-            # rewrite a bucket in full); MOR delete files would only add
-            # merge cost on the every-round frontier scan
+            # COW is the right trade for whole-table rewrites (every round
+            # rewrites the frontier in full); MOR delete files would only
+            # add merge cost on the every-round frontier scan
             "TBLPROPERTIES ('write.delete.mode'='copy-on-write', "
             "'write.update.mode'='copy-on-write', 'format-version'='2')"
         )
@@ -253,8 +250,7 @@ class IcebergSnapshotStore:
         self,
         round_no: int,
         *,
-        frontier_changed: DataFrame | None,
-        changed_buckets: list[int] | None,
+        frontier: DataFrame | None,
         seen_delta: DataFrame | None,
         fetched_delta: DataFrame | None = None,
         edges_delta: DataFrame | None = None,
@@ -265,37 +261,19 @@ class IcebergSnapshotStore:
     ) -> dict[str, Any]:
         """One round commit. Table writes first (each an atomic Iceberg
         snapshot), the ``rounds`` bookkeeping row LAST — it is the commit
-        pointer. ``changed_buckets`` semantics match the parquet store:
-        ``frontier_changed`` holds the full new contents of exactly those
-        buckets and ``overwritePartitions`` swaps exactly them."""
+        pointer. ``frontier`` is the full new frontier, as in the parquet
+        store."""
         prev = self.manifest() if self.exists() else None
         snap_ids: dict[str, int] = dict(prev["snapshot_ids"]) if prev else {}
 
-        if frontier_changed is not None:
-            fr = frontier_changed.withColumn(
+        if frontier is not None:
+            fr = frontier.withColumn(
                 "bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int")
             )
-            if changed_buckets is None:
-                # FULL rewrite: dynamic overwrite would keep partitions
-                # absent from `fr` (e.g. a bucket that drained empty) — an
-                # unconditional overwrite replaces the whole table contents
-                # in one atomic snapshot
-                fr.writeTo(self._tbl("frontier")).overwrite(F.lit(True))
-            else:
-                # dynamic overwrite only touches partitions present in `fr`;
-                # a bucket that became EMPTY must still be overwritten —
-                # explicit predicate delete for those
-                fr.writeTo(self._tbl("frontier")).overwritePartitions()
-                present = {
-                    int(r["bucket"])
-                    for r in fr.select("bucket").distinct().collect()
-                }
-                emptied = [b for b in changed_buckets if b not in present]
-                if emptied:
-                    self.spark.sql(
-                        f"DELETE FROM {self._tbl('frontier')} WHERE bucket IN "
-                        f"({', '.join(str(b) for b in emptied)})"
-                    )
+            # dynamic overwrite would keep partitions absent from `fr` (e.g.
+            # a bucket that drained empty) — an unconditional overwrite
+            # replaces the whole table contents in one atomic snapshot
+            fr.writeTo(self._tbl("frontier")).overwrite(F.lit(True))
             snap_ids["frontier"] = self._snapshot_id("frontier")
 
         def _append(name: str, df: DataFrame | None, lazy_create: bool = True) -> None:
@@ -342,7 +320,6 @@ class IcebergSnapshotStore:
                 f"snapshots/r{round_no:06d}{tag}",
                 self.n_buckets,
                 self.bloom_bits_per_shard,
-                self.bloom_hashes,
             )
 
         measured: dict[str, Any] = {}

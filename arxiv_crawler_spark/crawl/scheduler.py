@@ -6,7 +6,7 @@ Each scheduling round is ONE batch DataFrame job chain:
     frontier ── select_wave (priority + salted per-host windows) ──┐
     pages ───── fetch join (broadcast the wave) ── extract (Arrow) ─┤
     seen ────── anti-join dedupe (Bloom pre-filter) ── aggregate ───┤
-                merge frontier (COW buckets) + append fetched/edges ┘
+                merge frontier (full rewrite) + append fetched/edges ┘
                 → atomic snapshot commit (manifest flip)
 
 Two modes:
@@ -31,7 +31,9 @@ Scale notes (local[32] here, 1000 executors at 100 TB):
   no per-row driver collects and no whole-bitmap broadcast anywhere in
   the round loop (at 10^10-key sizing the bitmap is ~12 GB; broadcasting
   it per round would be the scale-killer).
-* frontier commits rewrite only changed hash buckets (COW manifests).
+* every frontier commit rewrites all hash buckets: a wave of K URLs plus
+  its ~8 links per URL lands in about min(n_buckets, 9·K) buckets, so
+  only replay-sized waves would leave any bucket untouched.
 """
 
 from __future__ import annotations
@@ -60,6 +62,15 @@ from arxiv_crawler_spark.functions.urls import arxiv_id_to_url, canonicalize_url
 
 __all__ = ["CrawlConfig", "CrawlEngine"]
 
+# the wave is broadcast into the fetch join below this size
+_BROADCAST_WAVE_MAX = 2_000_000
+# politeness join sides are broadcast only below this many rows (hosts);
+# above it the joins fall back to shuffle-on-host, which the budget windows
+# re-use (co-partitioned). At Common-Crawl scale the robots table is O(10^8)
+# hosts — only the non-default / non-empty-disallow EXCEPTIONS ship at all,
+# and even those stop broadcasting past this cap
+_BROADCAST_HOSTS_MAX = 500_000
+
 
 def _hist_agg(
     df: DataFrame, bucket_col
@@ -67,8 +78,8 @@ def _hist_agg(
     """ONE agg job over a frontier → (per-bucket priority histogram,
     per-bucket row counts). The histogram rides the manifest so the next
     round's select_wave derives its prefilter threshold and rank-bucket
-    boundaries driver-side — no approxQuantile scan of the frontier, no
-    count job (frontier.py hist_bounds). ≤ n_buckets × a few hundred sparse
+    boundaries driver-side — no histogram scan of the frontier, no count
+    job (frontier.py hist_bounds). ≤ n_buckets × a few hundred sparse
     (depth, count-bin) cells come back to the driver — aggregates, never
     rows."""
     rows = (
@@ -87,7 +98,7 @@ def _hist_agg(
 
 def _hist_flat(manifest_hist: dict | None) -> dict[tuple[int, int], int] | None:
     """Manifest per-bucket histogram → global {(depth, cbin): n} for
-    select_wave (bounds are global; buckets exist only for COW merging)."""
+    select_wave (bounds are global; the per-bucket split is lineage)."""
     if not manifest_hist:
         return None
     out: dict[tuple[int, int], int] = {}
@@ -105,29 +116,20 @@ class CrawlConfig:
     max_papers: int = 100  # crawler.py:32
     wave_size: int = 1  # K: fetches per round (wave mode)
     round_seconds: float = 3.0  # politeness token window (≙ rate_limit_delay)
-    hash_algo: str = "xxhash64"  # 'murmur64' | 'xxhash64' | 'md5_60'
+    hash_algo: str = "xxhash64"  # 'murmur64' | 'xxhash64'
     n_buckets: int = 32
-    salt_factor: int = 8
     use_bloom: bool = True
     bloom_bits_per_shard: int = 1 << 20
     # the Bloom pre-filter pays off once the exact anti-join probes a large
     # seen set; below this many seen urls the two extra Arrow passes cost
     # more than they save, so the filter stays warm but unused
     bloom_min_seen: int = 100_000
-    broadcast_wave_max: int = 2_000_000  # broadcast fetch join below this wave size
-    # politeness join sides are broadcast only below this many rows (hosts);
-    # above it the joins fall back to shuffle-on-host, which the budget
-    # windows re-use (co-partitioned). At Common-Crawl scale the robots
-    # table is O(10^8) hosts — only the non-default / non-empty-disallow
-    # EXCEPTIONS ship at all, and even those stop broadcasting past this cap
-    broadcast_hosts_max: int = 500_000
-    phase_switch: bool = True  # BFS → citation-greedy at max_papers//2 (crawler.py:243-246)
     # per-host deferral counters cost a full-frontier groupBy per round —
     # exact lineage for tests/audits, off for throughput runs
     collect_host_lineage: bool = False
-    # exact per-bucket lineage + COW bucket tracking costs two extra agg
-    # jobs per round; with it off the frontier is fully rewritten each
-    # round and sizes are reported as -1 (throughput mode)
+    # exact new-link / deduped counters cost one sum over the round's
+    # discoveries (overlapped with the commit writes); with it off both
+    # are reported as -1 (throughput mode)
     exact_lineage: bool = True
     # snapshot-store backend: 'parquet' (manifest store, sandbox default) |
     # 'iceberg' (native tables via crawl/iceberg_store.py — requires a
@@ -230,18 +232,18 @@ class CrawlEngine:
         if self.robots is None or n_exc == 0:
             return None, True
         exc = pol.host_budgets(self.robots, self.cfg.round_seconds, exceptions_only=True)
-        return exc, n_exc <= self.cfg.broadcast_hosts_max
+        return exc, n_exc <= _BROADCAST_HOSTS_MAX
 
     def _split_denied(self, links):
         _, n_dis = self._politeness_sizes()
         return pol.split_robots_denied(
-            links, self.robots, broadcast=n_dis <= self.cfg.broadcast_hosts_max
+            links, self.robots, broadcast=n_dis <= _BROADCAST_HOSTS_MAX
         )
 
     def _phase(self, processed_count: int) -> str:
         """crawler.py:236,243-246: forced BFS first; citation-greedy once
         papers_processed > max_papers // 2 (count survives resume — X5)."""
-        if self.cfg.phase_switch and processed_count > self.cfg.max_papers // 2:
+        if processed_count > self.cfg.max_papers // 2:
             return "citations"
         return "bfs"
 
@@ -291,8 +293,7 @@ class CrawlEngine:
         )
 
         # one agg: per-bucket sizes + priority histogram → manifest
-        # bookkeeping (saves a count job AND the approxQuantile frontier
-        # scan every subsequent round)
+        # bookkeeping (saves the next round's histogram scan of the frontier)
         bucket_col = F.pmod(F.col("url_hash"), F.lit(self.cfg.n_buckets)).cast("int")
         frontier_hist, bucket_sizes = _hist_agg(new_frontier, bucket_col)
         size = sum(bucket_sizes.values())
@@ -309,8 +310,7 @@ class CrawlEngine:
         return self.store.commit(
             round_no,
             tag=tag,
-            frontier_changed=new_frontier,
-            changed_buckets=None,  # full rewrite at bootstrap
+            frontier=new_frontier,
             seen_delta=denied_rows if self.robots is not None else None,
             bloom_delta=bloom_delta,
             meta={
@@ -344,7 +344,7 @@ class CrawlEngine:
             m["total_pops"],
         )
         if processed_count >= self.cfg.max_papers or m["frontier_size"] == 0:
-            return None  # crawler.py:243 termination (size -1 = unknown → run)
+            return None  # crawler.py:243 termination
 
         phase = self._phase(processed_count)
         frontier = self.store.frontier(m)
@@ -361,29 +361,13 @@ class CrawlEngine:
             host_budgets=budgets,
             broadcast_budgets=budgets_bcast,
             default_budget=pol.default_budget(self.cfg.round_seconds),
-            salt_factor=self.cfg.salt_factor,
-            frontier_size=m["frontier_size"] if m["frontier_size"] > 0 else None,
             priority_hist=_hist_flat(m.get("frontier_hist")),
         ).cache()
-        if self.cfg.exact_lineage:
-            waved = wave.count()
-            _mark("wave select+count")
-            if waved == 0:
-                return None
-        else:
-            # throughput mode: skip the dedicated count job — the stats agg
-            # below yields waved = processed + failed (left join keeps every
-            # wave row), so the count comes free with the extraction pass
-            waved = None
         _mark("wave select")
 
         # 2. fetch = join against pages (S8/S9: the sandbox fetch layer).
         # Broadcast the small wave so the 100 TB pages side never shuffles.
-        wave_b = (
-            F.broadcast(wave)
-            if (waved if waved is not None else wave_cap) <= self.cfg.broadcast_wave_max
-            else wave
-        )
+        wave_b = F.broadcast(wave) if wave_cap <= _BROADCAST_WAVE_MAX else wave
         # precondition: `pages` is unique by url (one snapshot per URL, per
         # the input_hint schema). A duplicate url would double-count its pop;
         # dedup here would shuffle wave×html bytes every round, so the
@@ -501,100 +485,51 @@ class CrawlEngine:
             F.col("first.citing_depth").alias("first_depth"),
         ).cache()
 
-        # --- driver-side accounting, few jobs, all on cached inputs ------
-        bucket_col = F.pmod(F.col("url_hash"), F.lit(self.cfg.n_buckets)).cast("int")
-
-        # one stats pass over the cached wave results (runs extraction once)
+        # one stats pass over the cached wave results (runs extraction once);
+        # waved = processed + failed (the left join keeps every wave row),
+        # so the wave count comes free with the extraction pass
         stats = fetched.agg(
             F.sum(F.when(F.col("status") == "processed", 1).otherwise(0)).alias("p"),
             F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("f"),
             F.coalesce(F.sum("num_arxiv_citations"), F.lit(0)).alias("links"),
         ).collect()[0]
         n_links = int(stats["links"])
-        if waved is None:
-            waved = int(stats["p"] or 0) + int(stats["f"] or 0)
-            if waved == 0:  # budgets deferred everything; nothing to commit
-                wave.unpersist()
-                fetched.unpersist()
-                return None
+        waved = int(stats["p"] or 0) + int(stats["f"] or 0)
+        if waved == 0:  # budgets deferred everything; nothing to commit
+            for df in (wave, fetched, disc):
+                df.unpersist()
+            return None
         _mark("fetch+extract+stats")
 
-        if self.cfg.exact_lineage:
-            # two small aggs (≤ n_buckets rows each): per-bucket discovery
-            # sums + wave buckets → changed-bucket set. Aggregated driver
-            # results only — never per-row collects.
-            disc_buckets = {
-                int(r["b"]): (int(r["occ"]), int(r["keys"]))
-                for r in disc.groupBy(bucket_col.alias("b"))
-                .agg(F.sum("occ").alias("occ"), F.count(F.lit(1)).alias("keys"))
-                .collect()
-            }
-            wave_buckets = {
-                int(r["b"])
-                for r in wave.groupBy(bucket_col.alias("b")).agg(F.count(F.lit(1))).collect()
-            }
-            _mark("bucket aggs")
-            n_new = sum(o for o, _ in disc_buckets.values())
-            changed = sorted(set(disc_buckets) | wave_buckets)
-        else:
-            n_new = -1
-            changed = None  # full rewrite, no COW tracking (throughput mode)
-
-        # 8. COW frontier merge over changed buckets only (or full rewrite)
-        if changed is None:
-            frontier_changed_old = frontier
-        elif changed:
-            frontier_changed_old = frontier.filter(bucket_col.isin(changed))
-        else:
-            frontier_changed_old = frontier.limit(0)
-        new_frontier_part = merge_frontier(
-            frontier_changed_old, wave.select("url_hash"), disc, round_no
-        ).cache()
+        # 8. frontier merge: the wave and its discoveries fold into the
+        # whole frontier, which the commit rewrites in full
+        new_frontier = merge_frontier(frontier, wave.select("url_hash"), disc, round_no).cache()
 
         # The priority-histogram agg (next round's scan-free wave bounds +
         # per-bucket sizes) runs INSIDE the commit's thread pool, overlapped
         # with the data writes — it shares the cached merge chain with the
         # frontier write, so block-level cache locks pipeline the two jobs
-        # instead of computing the chain twice.
+        # instead of computing the chain twice. The exact-lineage sum over
+        # the cached discoveries runs there too.
+        bucket_col = F.pmod(F.col("url_hash"), F.lit(self.cfg.n_buckets)).cast("int")
+
         def frontier_meta() -> dict[str, Any]:
-            hist_changed, per_bucket = _hist_agg(new_frontier_part, bucket_col)
-            frontier_hist = dict(m.get("frontier_hist") or {})
-            if changed is None:  # full rewrite — the new histogram is total
-                frontier_hist = hist_changed
-            else:  # COW: carried-forward buckets keep their cells
-                for b in changed:
-                    if str(b) in hist_changed:
-                        frontier_hist[str(b)] = hist_changed[str(b)]
-                    else:
-                        frontier_hist.pop(str(b), None)
+            frontier_hist, bucket_sizes = _hist_agg(new_frontier, bucket_col)
+            new_size = sum(bucket_sizes.values())
+            deduped = -1
             if self.cfg.exact_lineage:
-                # exact size from manifest bucket bookkeeping — no extra job
-                bucket_sizes = dict(m.get("bucket_sizes") or {})
-                old_changed = sum(int(bucket_sizes.get(str(b), 0)) for b in changed)
-                for b in changed:
-                    if str(b) in per_bucket:
-                        bucket_sizes[str(b)] = per_bucket[str(b)]
-                    else:
-                        bucket_sizes.pop(str(b), None)
-                new_size = m["frontier_size"] - old_changed + sum(
-                    per_bucket.get(str(b), 0) for b in changed
-                )
-            else:
-                bucket_sizes = {}
-                new_size = sum(per_bucket.values())  # full rewrite — sum is exact
+                # occurrences not newly queued (already seen, in-wave, or denied)
+                deduped = n_links - int(disc.agg(F.sum("occ")).collect()[0][0] or 0)
             return {
                 "frontier_hist": frontier_hist,
                 "bucket_sizes": bucket_sizes,
                 "frontier_size": new_size,
                 "lineage": {
                     **lineage,
+                    "deduped": deduped,
                     "frontier_size": new_size,
-                    "frontier_changed_buckets": {
-                        str(b): per_bucket.get(str(b), 0) for b in (changed or [])
-                    },
                 },
             }
-        _mark("lineage aggs")
 
         # 9. seen delta (+ robots-denied links, only when robots exist).
         # ``fetched`` is the wave left-joined to extraction, so it already
@@ -612,9 +547,6 @@ class CrawlEngine:
             )
             n_denied = denied_new.count()
             seen_delta = seen_delta.unionByName(denied_new)
-
-        # occurrences not newly queued (already seen, in-wave, or denied)
-        deduped = int(n_links - n_new) if n_new >= 0 else -1
 
         # politeness deferral lineage (exact, optional — full-frontier agg)
         deferred = 0
@@ -673,7 +605,6 @@ class CrawlEngine:
             "processed": int(stats["p"]),
             "failed": int(stats["f"]),
             "links": n_links,
-            "deduped": deduped,
             "robots_denied": n_denied,
             "politeness_deferred": deferred,
             "politeness_deferred_by_host": lineage_hosts,
@@ -682,8 +613,7 @@ class CrawlEngine:
         _mark("pre-commit misc")
         committed = self.store.commit(
             round_no,
-            frontier_changed=new_frontier_part,
-            changed_buckets=changed,
+            frontier=new_frontier,
             seen_delta=seen_delta,
             fetched_delta=fetched_out,
             edges_delta=edges_out,
@@ -696,21 +626,21 @@ class CrawlEngine:
                 "max_papers": self.cfg.max_papers,
             },
         )
-        new_size = int(committed["frontier_size"])
         _mark("commit")
-        for df in (wave, fetched, disc, new_frontier_part):
+        for df in (wave, fetched, disc, new_frontier):
             df.unpersist()
+        deduped = committed["lineage"]["deduped"]
         return RoundResult(
             round_no,
             phase,
             waved,
             int(stats["p"]),
             int(stats["f"]),
-            int(n_new),
+            n_links - deduped if deduped >= 0 else -1,
             deduped,
             n_denied,
             deferred,
-            new_size,
+            int(committed["frontier_size"]),
             time.monotonic() - t0,
             committed["lineage"],
         )

@@ -4,15 +4,17 @@ No Iceberg/Delta jars are available in this sandbox (SURVEY.md §7.0), so the
 store re-creates the two Iceberg behaviors the north_rule needs, behind an
 interface an Iceberg catalog can replace verbatim:
 
-* **Atomic snapshot commits with copy-on-write at bucket granularity.** The
-  frontier lives in ``n_buckets`` hash buckets (``pmod(url_hash, n_buckets)``
-  — the same key the joins shuffle on). A round rewrites *only the buckets
-  its wave/discoveries touch*; untouched buckets are carried forward in the
-  manifest by reference, exactly like Iceberg's file-level COW of a MERGE.
-  The manifest pointer is flipped with an ``os.replace`` (atomic on POSIX),
-  so a crash mid-commit leaves the previous snapshot intact — this is the
-  "resume exactly from a checkpoint" contract (vs. the reference, which
-  rewrites its whole JSON state after every paper, crawler.py:76-85,266).
+* **Atomic snapshot commits.** The frontier lives in ``n_buckets`` hash
+  buckets (``pmod(url_hash, n_buckets)`` — the same key the joins shuffle
+  on), written as one bucket-partitioned parquet dir per snapshot. Every
+  round writes the whole new frontier into its snapshot: a wave and its
+  ~8 links per popped URL touch about min(n_buckets, 9·wave) buckets, so
+  carrying untouched buckets forward would only pay off for waves of a few
+  URLs. The manifest pointer is flipped with an ``os.replace`` (atomic on
+  POSIX), so a crash mid-commit leaves the previous snapshot intact — this
+  is the "resume exactly from a checkpoint" contract (vs. the reference,
+  which rewrites its whole JSON state after every paper,
+  crawler.py:76-85,266).
 
 * **Append-only logs.** ``seen``, ``fetched`` and ``edges`` are chains of
   per-round delta directories (≙ papers.jsonl / citations.jsonl append
@@ -53,22 +55,13 @@ class SnapshotStore:
         n_buckets: int = 32,
         compact_seen_after: int = 48,
         bloom_bits_per_shard: int = 1 << 20,
-        bloom_hashes: int = 7,
-        tail_publish: str = "link",
     ):
         self.path = path
         self.spark = spark
         self.n_buckets = n_buckets
-        # committed-rounds tail publication mode for the streaming tail
-        # (streaming/tail.py): "link" hardlinks each committed delta's files
-        # into tail/<log>/ AFTER the manifest flip (exactly-once source for
-        # readStream), "copy" for filesystems without hardlinks (object
-        # stores), "off" disables the tail tree
-        self.tail_publish = tail_publish
         # bloom shard files reuse the bucket count so bitmap shards are
         # co-located with their seen/frontier key ranges
         self.bloom_bits_per_shard = bloom_bits_per_shard
-        self.bloom_hashes = bloom_hashes
         # the seen log is a delta chain, one dir per round, folded with
         # size-tiered (LSM-style) compaction: when more than
         # ``compact_seen_after`` runs share a tier (tier = log_T of how
@@ -158,8 +151,7 @@ class SnapshotStore:
         self,
         round_no: int,
         *,
-        frontier_changed: DataFrame | None,
-        changed_buckets: list[int] | None,
+        frontier: DataFrame | None,
         seen_delta: DataFrame | None,
         fetched_delta: DataFrame | None = None,
         edges_delta: DataFrame | None = None,
@@ -170,11 +162,10 @@ class SnapshotStore:
     ) -> dict[str, Any]:
         """Write one snapshot.
 
-        ``frontier_changed`` holds the *full new contents* of exactly the
-        buckets in ``changed_buckets``; every other bucket is carried
-        forward by manifest reference. ``changed_buckets=None`` means a
-        full rewrite (bootstrap / compaction). ``tag`` distinguishes
-        multiple snapshots at the same round number (e.g. re-seeding).
+        ``frontier`` is the *full new frontier*; every bucket of it is
+        written into this snapshot (``None`` keeps the previous snapshot's
+        frontier). ``tag`` distinguishes multiple snapshots at the same
+        round number (e.g. re-seeding).
 
         ``bloom_delta`` (an ``url_hash`` DataFrame) is OR-ed into the bloom
         shard files executor-side (COW per shard, see crawl/bloom.py);
@@ -227,12 +218,12 @@ class SnapshotStore:
         # from one session); wall cost ≈ the slowest write, not the sum
         jobs = []
         measured: dict[str, Any] = {}
-        if frontier_changed is not None:
-            fdir = f"{snap}/frontier"
+        fdir = f"{snap}/frontier"
+        if frontier is not None:
 
             def write_frontier():
                 (
-                    frontier_changed.withColumn(
+                    frontier.withColumn(
                         "bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int")
                     )
                     .repartition(
@@ -244,17 +235,6 @@ class SnapshotStore:
                     .partitionBy("bucket")
                     .parquet(os.path.join(self.path, fdir))
                 )
-                # throughput mode (full rewrite, size unknown): a parquet
-                # footer-metadata count of what we just wrote costs ~nothing
-                # and runs inside this thread, overlapped with other writes —
-                # gives the next round its prefilter sizing for free
-                if changed_buckets is None and (meta or {}).get("frontier_size") == -1:
-                    try:
-                        measured["frontier_size"] = self.spark.read.parquet(
-                            os.path.join(self.path, fdir)
-                        ).count()
-                    except Exception:  # empty frontier → no files to infer from
-                        measured["frontier_size"] = 0
 
             jobs.append(write_frontier)
 
@@ -303,7 +283,6 @@ class SnapshotStore:
                     snap,
                     self.n_buckets,
                     self.bloom_bits_per_shard,
-                    self.bloom_hashes,
                 )
 
             jobs.append(write_bloom)
@@ -321,18 +300,13 @@ class SnapshotStore:
                 for f in futures:
                     f.result()  # re-raise any write failure before the flip
 
-        if frontier_changed is not None:
-            written = {
-                int(d.split("=")[1])
-                for d in os.listdir(os.path.join(self.path, f"{snap}/frontier"))
+        if frontier is not None:
+            # an empty bucket writes no dir and drops out of the map
+            buckets = {
+                d.split("=")[1]: f"{fdir}/{d}"
+                for d in sorted(os.listdir(os.path.join(self.path, fdir)))
                 if d.startswith("bucket=")
             }
-            targets = set(changed_buckets) if changed_buckets is not None else set(range(self.n_buckets))
-            for b in targets:
-                if b in written:
-                    buckets[str(b)] = f"{snap}/frontier/bucket={b}"
-                else:
-                    buckets.pop(str(b), None)  # bucket became empty
 
         seen_deltas, seen_weights = self._compact_tiers(
             snap, seen_deltas, seen_weights, "seen", ["url_hash"]
@@ -389,11 +363,8 @@ class SnapshotStore:
         Self-healing: commit() also runs this against the PREVIOUS
         manifest before writing anything, so a crash between a flip and
         its publication is repaired on the next store interaction —
-        delayed, never wrong. Hardlinks cost no storage;
-        ``tail_publish="copy"`` is the object-store fallback, "off"
-        disables the tree."""
-        if self.tail_publish == "off":
-            return
+        delayed, never wrong. Hardlinks cost no storage; a filesystem
+        without them (cross-device, object stores) gets copies."""
 
         def link_dir(log: str, delta: str) -> None:
             src_dir = os.path.join(self.path, delta)
@@ -409,13 +380,10 @@ class SnapshotStore:
                 if os.path.exists(dst):
                     continue
                 src = os.path.join(src_dir, fn)
-                if self.tail_publish == "copy":
+                try:
+                    os.link(src, dst)
+                except OSError:  # cross-device / no-hardlink fs
                     shutil.copy2(src, dst)
-                else:
-                    try:
-                        os.link(src, dst)
-                    except OSError:  # cross-device / no-hardlink fs
-                        shutil.copy2(src, dst)
 
         for log, key in self._TAIL_LOGS.items():
             for delta in m.get(key, []) or []:
@@ -475,8 +443,8 @@ class SnapshotStore:
         """Expire unreferenced snapshot data (Iceberg ``expire_snapshots`` +
         ``remove_orphan_files``).
 
-        COW means every commit strands the data it replaced (old frontier
-        buckets, folded seen/fetched/edges runs, superseded bloom shards);
+        Every commit strands the data it replaced (the old frontier, folded
+        seen/fetched/edges runs, superseded bloom shards);
         it stays on disk so the PREVIOUS manifest remains valid until the
         flip — but once a new manifest is live, anything it does not
         reference is garbage. Two passes:

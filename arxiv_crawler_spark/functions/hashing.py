@@ -5,7 +5,7 @@ the frontier / seen tables (the reference keys its sets on raw arXiv-id
 strings — crawler.py:57-59; at 10^10 URLs a fixed 8-byte key is what makes
 the anti-join/Bloom machinery affordable).
 
-Three interchangeable algorithms behind ``url_hash(col, algo=...)``:
+Two interchangeable algorithms behind ``url_hash(col, algo=...)``:
 
 * ``murmur64``  — low 64 bits of MurmurHash3 x64_128 (Austin Appleby's
   public-domain algorithm), implemented as a **vectorized numpy pandas UDF**
@@ -16,9 +16,10 @@ Three interchangeable algorithms behind ``url_hash(col, algo=...)``:
   ``_murmur3_x64_128_py`` and is cross-checked in tests.
 * ``xxhash64``  — Spark's built-in ``F.xxhash64`` (JVM-side, fastest; the
   default for the engine hot path).
-* ``md5_60``    — first 60 bits of md5 as a positive int64; slowest but
-  reproducible verbatim in DuckDB (``('0x'||substr(md5(x),1,15))::BIGINT``),
-  used by the oracle-checked queries.
+
+``md5_hash64`` (first 60 bits of md5 as a positive int64, reproducible
+verbatim in DuckDB as ``('0x'||substr(md5(x),1,15))::BIGINT``) serves the
+oracle-checked queries.
 
 The zero-padding trick: murmur3's tail switch accumulates ``byte << 8*i`` for
 ``i < len & 15`` only; reading the full 16-byte tail block from a
@@ -179,12 +180,10 @@ def url_hash(c: Column, algo: str = "xxhash64") -> Column:
     """64-bit key for frontier/seen tables.
 
     ``xxhash64`` (default, JVM fast path) | ``murmur64`` (north_rule hash,
-    numpy pandas UDF) | ``md5_60`` (DuckDB-parity).
+    numpy pandas UDF).
     """
     if algo == "xxhash64":
         return F.xxhash64(c)
     if algo == "murmur64":
         return murmur3_64_udf(c)
-    if algo == "md5_60":
-        return md5_hash64(c)
     raise ValueError(f"unknown url_hash algo: {algo}")

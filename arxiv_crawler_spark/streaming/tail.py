@@ -29,7 +29,7 @@ Contracts and caveats (documented, not hidden):
   rounds — 48 by default), or run the crawl with ``gc_every_rounds=0``
   while tailing.
 * Publication uses hardlinks (zero storage); on filesystems without them
-  (object stores) construct the store with ``tail_publish="copy"``.
+  (cross-device, object stores) the store falls back to copies.
 """
 
 from __future__ import annotations

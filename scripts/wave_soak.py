@@ -80,7 +80,7 @@ def main() -> None:
     )
 
     frontier = synth_frontier(spark, n_frontier).persist()
-    n_live = frontier.count()
+    frontier.count()  # materialize before the timed rounds
     seq_next = n_frontier
 
     rows = []
@@ -100,7 +100,6 @@ def main() -> None:
             host_budgets=budgets,
             default_budget=1,
             salt_factor=8,
-            frontier_size=n_live,
             priority_hist=hist,
         ).persist()
         agg = wave.agg(

@@ -122,9 +122,9 @@ def test_wave_mode_seen_set_equal(spark, world_pdf, oracle_out, tmp_path_factory
 
 
 def test_throughput_mode_seen_set_equal(spark, world_pdf, oracle_out, tmp_path_factory):
-    """exact_lineage=False (the bench's throughput mode: no per-bucket audit
-    jobs, no dedicated wave count, frontier size measured from the written
-    parquet) must still crawl the exact same set."""
+    """exact_lineage=False (the bench's throughput mode: no new-link /
+    deduped sum; frontier size from the histogram agg over the new
+    frontier, as in exact mode) must still crawl the exact same set."""
     world, seeds, _, _ = oracle_out
     trace, st = crawl_oracle(world, seeds, max_papers=10_000)
     pages = spark_pages(spark, world_pdf)
@@ -215,7 +215,7 @@ def test_lineage_counters(replay_engine):
     m = replay_engine.store.manifest()
     lin = m["lineage"]
     assert lin["fetched"] == 1  # replay waves are single pops
-    assert "frontier_changed_buckets" in lin and lin["frontier_size"] == m["frontier_size"]
+    assert lin["frontier_size"] == m["frontier_size"] == sum(m["bucket_sizes"].values())
     assert m["processed_count"] == MAX_PAPERS
 
 

@@ -295,9 +295,10 @@ def test_hist_bounds_cover_target_exactly():
 
 
 def test_crawl_maintains_frontier_hist(spark, tmp_path_factory):
-    """The manifest histogram must stay exactly consistent with the live
-    frontier across COW rounds (changed buckets replaced, carried buckets
-    kept) — in both lineage modes."""
+    """The manifest histogram and per-bucket sizes must stay exactly
+    consistent with the live frontier across rounds, and every frontier
+    bucket must be rewritten into the newest snapshot — in both lineage
+    modes."""
     from arxiv_crawler_spark.crawl.frontier import hist_cell_cols
     from arxiv_crawler_spark.crawl.scheduler import _hist_flat
 
@@ -314,6 +315,16 @@ def test_crawl_maintains_frontier_hist(spark, tmp_path_factory):
         live = _hist_of(eng.store.frontier(m))
         assert _hist_flat(m.get("frontier_hist")) == (live or None)
         assert m["frontier_size"] == sum(live.values())
+        assert all(p.startswith(m["snapshot"] + "/") for p in m["frontier_buckets"].values())
+        by_bucket = {
+            str(r["b"]): int(r["c"])
+            for r in eng.store.frontier(m)
+            .groupBy(F.pmod("url_hash", F.lit(8)).alias("b"))
+            .count()
+            .withColumnRenamed("count", "c")
+            .collect()
+        }
+        assert m["bucket_sizes"] == by_bucket
 
 
 def test_parse_robots_txt_unit():
@@ -450,7 +461,6 @@ def test_wave_cap_beyond_2_21(spark):
     )
     wave = select_wave(
         frontier, "citations", wave_cap=cap, default_budget=cap, salt_factor=4,
-        frontier_size=n,
     )
     agg = wave.agg(
         F.count(F.lit(1)).alias("n"),

@@ -113,23 +113,6 @@ def test_inline_gc_preserves_crawl(spark, tmp_path_factory):
     )
 
 
-def test_cow_buckets_carried_forward(spark, tmp_path_factory):
-    """Unchanged frontier buckets must be referenced from older snapshots,
-    not rewritten (manifest paths spanning multiple snapshot dirs)."""
-    pages = spark_pages(spark, gen_world(n_docs=40, seed=42)).cache()
-    d = str(tmp_path_factory.mktemp("cow"))
-    eng = CrawlEngine(
-        spark, d, pages, CrawlConfig(mode="replay", max_papers=10, n_buckets=32)
-    )
-    eng.bootstrap(gen_seeds(40))
-    eng.run()
-    m = eng.store.manifest()
-    snapshots = {p.split("/")[1] for p in m["frontier_buckets"].values()}
-    assert len(snapshots) > 1, "every bucket rewritten every round — COW not effective"
-    # and the frontier still reads coherently
-    assert eng.store.frontier(m).count() == m["frontier_size"]
-
-
 # ------------------------------------------------------- iceberg backend
 #
 # Backend (a) of SURVEY.md §7.0.1: native Iceberg tables behind the same

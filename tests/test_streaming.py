@@ -294,7 +294,7 @@ def test_store_tail_torn_commit_invisible(spark, tmp_path_factory):
         "id as url_hash", "cast(null as string) as url", "cast(null as string) as host",
         "id as count", "cast(0 as int) as depth", "id as discovery_seq",
     )
-    store.commit(1, frontier_changed=frontier, changed_buckets=None,
+    store.commit(1, frontier=frontier,
                  seen_delta=None, fetched_delta=delta(0, 10, 1),
                  meta={"processed_count": 10, "failed_count": 0,
                        "total_pops": 10, "frontier_size": 0})
@@ -320,7 +320,7 @@ def test_store_tail_torn_commit_invisible(spark, tmp_path_factory):
     assert got == set(range(10))  # torn round invisible
 
     # proper commit of round 2 (clobbers the torn dir, publishes post-flip)
-    store.commit(2, frontier_changed=None, changed_buckets=None,
+    store.commit(2, frontier=None,
                  seen_delta=None, fetched_delta=delta(10, 25, 2),
                  meta={"processed_count": 25, "failed_count": 0,
                        "total_pops": 25, "frontier_size": 0})
@@ -350,7 +350,7 @@ def test_tail_gc_prunes_compacted_rounds(spark, tmp_path_factory):
 
     n_rounds = 7  # tier T=2 → folds trigger well within 7 commits
     for r in range(1, n_rounds + 1):
-        store.commit(r, frontier_changed=None, changed_buckets=None,
+        store.commit(r, frontier=None,
                      seen_delta=None, fetched_delta=delta((r - 1) * 10, r * 10, r),
                      meta={"processed_count": r * 10, "failed_count": 0,
                            "total_pops": r * 10, "frontier_size": 0})
